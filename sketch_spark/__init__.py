@@ -5,7 +5,7 @@ reference C++ library kodingkoning/sketch (a fork of dnbaker/sketch with
 MPI-distributed sketch building): mergeable HyperLogLog, Bloom filter,
 Count-Min sketch, Count sketch, bottom-k MinHash (KMV), KLL quantile sketch
 and t-digest, expressed as vectorized NumPy kernels driven through Spark's
-Arrow exchange (``mapInArrow`` / ``applyInPandas``) with tree-structured
+Arrow exchange (``mapInArrow`` / grouped-agg pandas UDFs) with tree-structured
 distributed merges.
 
 Design contract (see SURVEY.md):
@@ -64,7 +64,6 @@ from sketch_spark.spark import (  # noqa: F401
     build_sketches_from_parquet,
     estimate_udf,
     get_spark,
-    merge_states_expr,
     partition_states,
     quantile_udf,
     rollup_states,

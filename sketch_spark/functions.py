@@ -23,7 +23,7 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
-from sketch_spark.sketches.base import from_bytes
+from sketch_spark.sketches.base import fold_states, from_bytes
 
 _UDFS: dict | None = None
 
@@ -65,12 +65,7 @@ def _build() -> dict:
 
     @pandas_udf("binary")
     def sketch_merge_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            sk = from_bytes(bytes(x))
-            sk.merge(from_bytes(bytes(y)))
-            out.append(sk.to_bytes())
-        return pd.Series(out)
+        return pd.Series([fold_states(pair).to_bytes() for pair in zip(a, b)])
 
     @pandas_udf("double")
     def sketch_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:

@@ -487,9 +487,7 @@ def tensor_moments_by_key(
     materializing a pairwise join — the 100 TB shape for cross-corpus
     second-moment comparison."""
     from sketch_spark.sketches.rnla import TensorSketch
-    from sketch_spark.spark.agg import merge_keyed_states
-
-    key_type = dict(df.dtypes)[key]
+    from sketch_spark.spark.agg import _keyed_schema, merge_keyed_states
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # _encode_keys (the sketch_by_key encoder) keeps native key types
@@ -526,7 +524,5 @@ def tensor_moments_by_key(
                 names=[key, "name", "state"],
             )
 
-    partials = df.select(key, vec_col).mapInArrow(
-        partial, f"{key} {key_type}, name string, state binary"
-    )
-    return merge_keyed_states(partials, key, key_type)
+    partials = df.select(key, vec_col).mapInArrow(partial, _keyed_schema(df, [key]))
+    return merge_keyed_states(partials, key)

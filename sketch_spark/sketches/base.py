@@ -137,7 +137,7 @@ class Sketch:
     def to_bytes(self) -> bytes:
         """Self-describing frame. Large register arrays (partition-level CMS /
         Bloom tables are mostly zeros) are zlib-compressed when that shrinks
-        them — the shuffle/treeReduce payload per task drops from MBs to KBs,
+        them — the shuffle/fold-tree payload per task drops from MBs to KBs,
         which is what keeps the merge stage network-free at scale. The
         reference gzips its states for the same reason (hll.h:1013-1060)."""
         arrays = self._arrays()
@@ -234,4 +234,19 @@ def merge_all(sketches) -> Sketch:
     acc = next(it).copy()
     for s in it:
         acc.merge(s)
+    return acc
+
+
+def fold_states(blobs) -> Sketch:
+    """Left fold of serialized states into one sketch — the single merge
+    primitive every Spark-side combine goes through. Each blob is
+    deserialized exactly once and nothing is re-serialized (a pairwise
+    bytes→bytes reduce would pay decompress+compress per step)."""
+    it = iter(blobs)
+    first = next(it, None)
+    if first is None:
+        raise ValueError("no states to fold")
+    acc = from_bytes(bytes(first))
+    for blob in it:
+        acc.merge(from_bytes(bytes(blob)))
     return acc

@@ -7,35 +7,40 @@ MPI job (/root/reference/include/sketch/mpiParallelIO.cpp):
     ---------                         ----
     MPI_File_read_at per rank      →  parquet scan, Spark plans the splits
     sketchKmers → local sketch     →  mapInArrow: per-partition NumPy update
-    MPI_Gather to rank 0 + re-add  →  log-depth keyed tree merge (the
-      (flat gather :257-299;          reference's own binomial tree is
-       buggy tree :301-345)           "buggy, so should not be used" :83-84 —
-                                      Spark's shuffle machinery does it right)
+    MPI_Gather to rank 0 + re-add  →  :func:`tree_fold` over (name, state)
+      (flat gather :257-299;          rows (the reference's own binomial tree
+       buggy tree :301-345)           is "buggy, so should not be used"
+                                      :83-84); grouped builds fold per key in
+                                      :func:`merge_keyed_states`
     rank-0 estimate                →  driver-side estimate on merged state
 
-Everything per-row is NumPy over Arrow batches — no per-row Python
-(north-rule requirement). The partial-aggregate output is one tiny row per
-(partition × spec): (name, state BinaryType, n_rows, n_values, wall_ms), so
-the shuffle that follows moves kilobytes per partition regardless of input
-size. At 100 TB the scan dominates, which is exactly the profile you want.
+Every state combine goes through one primitive,
+:func:`sketch_spark.sketches.base.fold_states` (deserialize each blob once,
+serialize nothing). Everything per-row is NumPy over Arrow batches — no
+per-row Python (north-rule requirement). The partial-aggregate output is one
+tiny row per (partition × spec): (name, state BinaryType, n_rows, n_values,
+wall_ms), so the shuffle that follows moves kilobytes per partition
+regardless of input size. At 100 TB the scan dominates, which is exactly the
+profile you want.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
+from sketch_spark.functions import _summary
 from sketch_spark.hashing import hash_strings
-from sketch_spark.sketches.base import Sketch, from_bytes, make_sketch
+from sketch_spark.sketches import base as _base
+from sketch_spark.sketches.base import Sketch, fold_states, from_bytes, make_sketch
 
 _STATE_SCHEMA = "name string, state binary, n_rows long, n_values long, wall_ms double"
 
@@ -97,6 +102,24 @@ def _extract_column(batch: pa.RecordBatch, col: str, want_float: bool) -> np.nda
     return _extract_from_array(batch.column(batch.schema.get_field_index(col)), want_float)
 
 
+def _absorb(sketches: dict[str, Sketch], table, spec_list: list[tuple]) -> list[int]:
+    """The one build task body: update each spec's sketch from its column of
+    one Arrow table or record batch, returning the value count per spec.
+
+    Values are fed in ``UPDATE_SUPER`` slices: a parquet-direct unit can be
+    tens of millions of values, and the batch-boundary-dependent kinds
+    (pccm/cbf/pcbf/vac/hk) get a fixed-size sequence that is a pure function
+    of the input, so kill/resume and re-runs stay byte-identical."""
+    step = _base.UPDATE_SUPER
+    counts = []
+    for name, _, col, _, want_float in spec_list:
+        vals = _extract_from_array(table.column(col), want_float)
+        for s in range(0, len(vals), step):
+            sketches[name].update(vals[s : s + step])
+        counts.append(len(vals))
+    return counts
+
+
 def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     """Partial aggregation: one serialized sketch state per (partition, spec).
 
@@ -110,20 +133,17 @@ def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
         t0 = time.perf_counter()
         sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
         n_rows = 0
-        n_values = {name: 0 for name, *_ in spec_list}
+        n_values = [0] * len(spec_list)
         for batch in batches:
             n_rows += batch.num_rows
-            for name, _, col, _, want_float in spec_list:
-                vals = _extract_column(batch, col, want_float)
-                n_values[name] += len(vals)
-                sketches[name].update(vals)
+            n_values = [a + b for a, b in zip(n_values, _absorb(sketches, batch, spec_list))]
         wall_ms = (time.perf_counter() - t0) * 1e3
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([name for name, *_ in spec_list], pa.string()),
                 pa.array([sketches[name].to_bytes() for name, *_ in spec_list], pa.binary()),
                 pa.array([n_rows] * len(spec_list), pa.int64()),
-                pa.array([n_values[name] for name, *_ in spec_list], pa.int64()),
+                pa.array(n_values, pa.int64()),
                 pa.array([wall_ms] * len(spec_list), pa.float64()),
             ],
             names=["name", "state", "n_rows", "n_values", "wall_ms"],
@@ -133,57 +153,61 @@ def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     return df.select(*cols).mapInArrow(build, _STATE_SCHEMA)
 
 
-def _merge_bytes(a: bytes, b: bytes) -> bytes:
-    sa = from_bytes(bytes(a))
-    sa.merge(from_bytes(bytes(b)))
-    return sa.to_bytes()
+# Fan-out of the state fold tree: each level of :func:`tree_fold` shuffles
+# the (name, state) rows into 1/FOLD_FANOUT as many partitions, so the
+# final fold after collect() sees at most FOLD_FANOUT states per name. Read
+# at call time so tests can shrink it.
+FOLD_FANOUT = 16
 
 
-def _fold_named_states(rows) -> "Iterator[tuple[str, bytes]]":
-    """Partition-local fold of (name, state) pairs: each incoming state is
-    deserialized once, the accumulator serialized once — a pairwise reduce
-    would pay compress/decompress per step."""
-    acc: dict[str, Sketch] = {}
-    for name, blob in rows:
-        sk = from_bytes(bytes(blob))
-        if name in acc:
-            acc[name].merge(sk)
-        else:
-            acc[name] = sk
-    for name, sk in acc.items():
-        yield name, sk.to_bytes()
-
-
-def tree_merge_states(states: DataFrame, fanout: int = 16) -> dict[str, Sketch]:
-    """Log-fanout tree merge of serialized states → driver dict.
-
-    Each level coalesces the partition count by ``fanout`` and folds the
-    co-located states with a single deserialize-once pass, so no task ever
-    re-serializes per pair: the correct version of the reference's disabled
-    binomial-tree reduction (mpiParallelIO.cpp:301-345).
-    """
-    rdd = states.select("name", "state").rdd.map(lambda r: (r[0], bytes(r[1])))
-    nparts = max(1, rdd.getNumPartitions())
-    rdd = rdd.mapPartitions(_fold_named_states)
-    while nparts > fanout:
-        nparts = max(fanout, nparts // fanout)
-        # shuffle=True: narrow coalesce would collapse the upstream partial-
-        # aggregation stage to `nparts` tasks; the shuffle moves only states
-        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_named_states)
-    out: dict[str, Sketch] = {}
-    for name, blob in rdd.collect():
-        sk = from_bytes(blob)
-        if name in out:
-            out[name].merge(sk)
-        else:
-            out[name] = sk
+def _group(pairs) -> dict:
+    out: dict = {}
+    for key, blob in pairs:
+        out.setdefault(key, []).append(blob)
     return out
 
 
-def build_sketches(df: DataFrame, specs: list[SketchSpec], fanout: int = 16) -> dict[str, Sketch]:
+def fold_by_key(pairs) -> dict:
+    """(key, state) pairs → {key: Sketch}, folding each key's states in
+    arrival order with :func:`fold_states`."""
+    return {key: fold_states(blobs) for key, blobs in _group(pairs).items()}
+
+
+def _fold_partition(rows) -> Iterator[tuple[str, bytes]]:
+    """One fold-tree task: fold each name's co-located states into one. A
+    lone state passes through as-is, with no decode/encode round trip."""
+    for name, blobs in _group(rows).items():
+        yield name, blobs[0] if len(blobs) == 1 else fold_states(blobs).to_bytes()
+
+
+def tree_fold(rdd) -> dict[str, Sketch]:
+    """The fold tree for an RDD of (name, state bytes): a partition-local
+    fold, then ``coalesce(shuffle=True)`` levels at :data:`FOLD_FANOUT`,
+    then a fold of the collected states → {name: Sketch}. Each level
+    deserializes a state at most once — the correct version of the
+    reference's disabled binomial tree (mpiParallelIO.cpp:301-345).
+
+    shuffle=True: a narrow coalesce would collapse the upstream build stage
+    to ``nparts`` tasks (losing scan parallelism); the shuffle moves only
+    the kilobyte states, so the scan stays full-width and only the fold
+    runs narrow."""
+    nparts = rdd.getNumPartitions()
+    rdd = rdd.mapPartitions(_fold_partition)
+    while nparts > FOLD_FANOUT:
+        nparts = max(FOLD_FANOUT, nparts // FOLD_FANOUT)
+        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_partition)
+    return fold_by_key(rdd.collect())
+
+
+def tree_merge_states(states: DataFrame) -> dict[str, Sketch]:
+    """(name, state) DataFrame → {name: Sketch} through :func:`tree_fold`."""
+    return tree_fold(states.select("name", "state").rdd.map(lambda r: (r[0], bytes(r[1]))))
+
+
+def build_sketches(df: DataFrame, specs: list[SketchSpec]) -> dict[str, Sketch]:
     """scan → per-partition partial sketches → tree merge → {name: Sketch}.
     An empty input yields the identity (empty) sketch for every spec."""
-    out = tree_merge_states(partition_states(df, specs), fanout=fanout)
+    out = tree_merge_states(partition_states(df, specs))
     for s in specs:
         out.setdefault(s.name, s.new())
     return out
@@ -195,7 +219,6 @@ def build_weighted_sketch(
     value_col: str,
     weight_col: str,
     params: dict | None = None,
-    fanout: int = 16,
 ) -> Sketch:
     """Weighted build: one sketch over (value, weight) PAIR rows — for kinds
     whose ``update(values, counts=...)`` takes per-item weights (cms,
@@ -221,7 +244,7 @@ def build_weighted_sketch(
         )
 
     states = df.select(value_col, weight_col).mapInArrow(build, "name string, state binary")
-    out = tree_merge_states(states, fanout=fanout)
+    out = tree_merge_states(states)
     return out.get("w", make_sketch(kind, **params))
 
 
@@ -236,8 +259,8 @@ def sketch_by_key(
 
     Phase 1 (map side): within each partition, group Arrow batches by key in
     NumPy and update one sketch per (key, spec) — the partial aggregate.
-    Phase 2 (one shuffle of tiny states): groupBy(key, name) + applyInPandas
-    merge. The shuffle moves |keys|×|specs| states per partition, never raw
+    Phase 2 (one shuffle of tiny states): :func:`merge_keyed_states`, a
+    groupBy(key, name) fold. The shuffle moves |keys|×|specs| states per partition, never raw
     rows — map-side combine done manually since Spark has no Python UDAF
     with partial aggregation.
 
@@ -263,8 +286,6 @@ def sketch_by_key(
     """
     spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
     keys = [key] if isinstance(key, str) else list(key)
-    dtypes = dict(df.dtypes)
-    key_types = [dtypes[k] for k in keys]
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         return _keyed_partial(
@@ -272,10 +293,15 @@ def sketch_by_key(
         )
 
     cols = sorted({s.col for s in specs} | set(keys) | ({weight_col} if weight_col else set()))
-    key_schema = ", ".join(f"{k} {t}" for k, t in zip(keys, key_types))
-    partials = df.select(*cols).mapInArrow(partial, f"{key_schema}, name string, state binary")
+    partials = df.select(*cols).mapInArrow(partial, _keyed_schema(df, keys))
+    return merge_keyed_states(partials, keys)
 
-    return merge_keyed_states(partials, keys, key_types)
+
+def _keyed_schema(df: DataFrame, keys: list[str]) -> str:
+    """DDL schema of a (keys..., name, state) partials table whose key
+    columns keep ``df``'s types."""
+    dtypes = dict(df.dtypes)
+    return ", ".join([f"{k} {dtypes[k]}" for k in keys] + ["name string", "state binary"])
 
 
 def _encode_keys(batch: pa.RecordBatch, keys: list[str]):
@@ -421,28 +447,19 @@ def _keyed_partial(
         yield emit(acc, arrow_types)
 
 
-def merge_keyed_states(
-    partials: DataFrame, key: str | list[str], key_type: str | list[str]
-) -> DataFrame:
-    """Phase 2 of a grouped build: groupBy(keys, name) reduce-merge of the
-    (keys..., name, state) partials — one tiny shuffle of kilobyte states.
-    The output key columns keep their types (no silent stringification)."""
+def merge_keyed_states(partials: DataFrame, key: str | list[str]) -> DataFrame:
+    """Phase 2 of a grouped build: ``groupBy(keys, name)`` and fold each
+    group's states with one GROUPED_AGG pandas UDF (Series → scalar) over
+    :func:`fold_states` — one shuffle of kilobyte states. Only the state
+    column crosses into Python; the key columns stay in the JVM and keep
+    their types."""
     keys = [key] if isinstance(key, str) else list(key)
-    key_types = [key_type] if isinstance(key_type, str) else list(key_type)
 
-    def final_merge(pdf):
-        sk = from_bytes(bytes(pdf["state"].iloc[0]))
-        for blob in pdf["state"].iloc[1:]:
-            sk.merge(from_bytes(bytes(blob)))
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["name"] = [pdf["name"].iloc[0]]
-        row["state"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    @pandas_udf("binary")
+    def merge_states(states: pd.Series) -> bytes:
+        return fold_states(states).to_bytes()
 
-    schema = ", ".join(
-        [f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"]
-    )
-    return partials.groupBy(*keys, "name").applyInPandas(final_merge, schema)
+    return partials.groupBy(*keys, "name").agg(merge_states("state").alias("state"))
 
 
 def rollup_states(states: DataFrame, keys: list[str]) -> DataFrame:
@@ -460,41 +477,27 @@ def rollup_states(states: DataFrame, keys: list[str]) -> DataFrame:
     rollup tables can be layered arbitrarily deep without error
     accumulation — the reference's combine phase generalized from one
     global merge to any lattice of groupings."""
-    dtypes = dict(states.dtypes)
-    missing = [c for c in (*keys, "name", "state") if c not in dtypes]
+    missing = [c for c in (*keys, "name", "state") if c not in states.columns]
     if missing:
         raise ValueError(
             f"rollup_states input is missing column(s) {missing}: expected a "
             "keyed-states table (key columns..., name, state) as produced by "
             "sketch_by_key / sketch_by_key_from_parquet, not a raw data table"
         )
-    key_types = [dtypes[k] for k in keys]
-    return merge_keyed_states(states.select(*keys, "name", "state"), list(keys), key_types)
+    return merge_keyed_states(states.select(*keys, "name", "state"), list(keys))
 
 
 # ---- state-query column functions (drive estimates inside DataFrames) -------
 
 
 def estimate_udf():
-    """pandas UDF: BinaryType sketch state → double estimate.
-
-    Works for any state kind with a scalar summary: hll/minhash →
-    cardinality, bloom → fill-ratio cardinality, cms → total count.
+    """pandas UDF: BinaryType sketch state → double estimate — the scalar
+    summary of ``sketch_estimate`` (hll/minhash → cardinality, bloom →
+    fill-ratio cardinality, cms → total count, …; NaN if the kind has none).
     """
     @pandas_udf("double")
     def _est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            sk = from_bytes(bytes(blob))
-            if hasattr(sk, "estimate"):
-                out.append(sk.estimate())
-            elif hasattr(sk, "cardinality_estimate"):
-                out.append(sk.cardinality_estimate())
-            elif hasattr(sk, "total"):
-                out.append(float(sk.total()))
-            else:
-                out.append(float("nan"))
-        return pd.Series(out)
+        return pd.Series([_summary(from_bytes(bytes(blob))) for blob in states])
 
     return _est
 
@@ -508,19 +511,3 @@ def quantile_udf(qs: list[float]):
         )
 
     return _q
-
-
-def merge_states_expr(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """groupBy(group_cols, name) reduce-merge of a states DataFrame."""
-
-    def m(pdf):
-        sk = from_bytes(bytes(pdf["state"].iloc[0]))
-        for blob in pdf["state"].iloc[1:]:
-            sk.merge(from_bytes(bytes(blob)))
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["name"] = [pdf["name"].iloc[0]]
-        row["state"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    schema = ", ".join([f"{c} string" for c in group_cols] + ["name string", "state binary"])
-    return df.groupBy(*group_cols, "name").applyInPandas(m, schema)

@@ -22,16 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, merge_states_expr, sketch_by_key
-
-
-def _list_input_files(spark: SparkSession, input_path: str) -> list[str]:
-    files = [
-        os.path.join(input_path, f)
-        for f in os.listdir(input_path)
-        if f.endswith(".parquet")
-    ]
-    return sorted(files)
+from sketch_spark.spark.agg import SketchSpec, rollup_states, sketch_by_key
+from sketch_spark.spark.files import list_parquet_files
 
 
 def checkpointed_build(
@@ -46,7 +38,7 @@ def checkpointed_build(
 
     ``fail_after_files`` injects a crash after K files for resume tests.
     """
-    all_files = _list_input_files(spark, input_path)
+    all_files = list_parquet_files(input_path)
     done: set[str] = set()
     if os.path.exists(ckpt_dir) and any(
         f.endswith(".parquet") for f in os.listdir(ckpt_dir)
@@ -69,10 +61,13 @@ def checkpointed_build(
     ):
         raise RuntimeError("injected failure: checkpoint incomplete")
 
-    # final merge over all checkpointed states (tiny: |files|×|specs| rows)
-    states = spark.read.parquet(ckpt_dir)
-    merged = merge_states_expr(states.select("name", "state").withColumn("g", F.lit("all")), ["g"])
-    return {r["name"]: from_bytes(bytes(r["state"])) for r in merged.collect()}
+    # final merge over all checkpointed states (tiny: |files|×|specs| rows);
+    # a spec whose column had no values in any file has no checkpoint row
+    merged = rollup_states(spark.read.parquet(ckpt_dir), [])
+    out = {r["name"]: from_bytes(bytes(r["state"])) for r in merged.collect()}
+    for s in specs:
+        out.setdefault(s.name, s.new())
+    return out
 
 
 def lineage_report(spark: SparkSession, ckpt_dir: str) -> DataFrame:

@@ -12,9 +12,11 @@ pruning (only the sketched columns are read at all).
 
 Scale design: the task unit is the input file (at 100 TB, files ≫ cores, so
 Spark's scheduler balances them; per-task pyarrow runs single-threaded to
-avoid oversubscribing executor cores — Spark owns the parallelism). States
-merge through a log-depth treeReduce, kilobytes per task regardless of
-input size. This is the same execution shape as the reference's MPI job
+avoid oversubscribing executor cores — Spark owns the parallelism). Each
+task feeds its unit tables to the same task body as the DataFrame path
+(`agg._absorb`), and the per-task states — kilobytes regardless of input
+size — merge through the shared fold tree (`agg.tree_fold`, every combine
+a `fold_states`). This is the same execution shape as the reference's MPI job
 (mpiParallelIO.cpp: chunked parallel read → local sketch → gathered merge)
 with Spark doing the scheduling, retries, and the tree correctly (the
 reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
@@ -32,9 +34,14 @@ from typing import Iterable, Iterator
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
-from sketch_spark.sketches import base as _base
-from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, _extract_from_array, _keyed_partial, merge_keyed_states
+from sketch_spark.sketches.base import Sketch, make_sketch
+from sketch_spark.spark.agg import (
+    SketchSpec,
+    _absorb,
+    _keyed_partial,
+    merge_keyed_states,
+    tree_fold,
+)
 
 
 def list_parquet_files(path_or_files: str | list[str]) -> list[str]:
@@ -49,41 +56,19 @@ def list_parquet_files(path_or_files: str | list[str]) -> list[str]:
     )
 
 
-def _build_states_for_units(
-    units: Iterable[tuple], spec_list: list[tuple], row_filter=None, extra_columns=()
-) -> Iterator[dict[str, bytes]]:
-    """Task body: read the needed columns of each work unit with pyarrow
-    (single-threaded — Spark owns core-level parallelism), update one sketch
-    set, emit serialized states. A unit is (path, rg_lo, rg_hi): a
-    contiguous row-group range, or the whole file when rg_lo is None."""
+def _read_units(units: Iterable[tuple], cols: list[str]) -> Iterator[pa.Table]:
+    """Read the needed columns of each work unit with pyarrow
+    (single-threaded — Spark owns core-level parallelism). A unit is
+    (path, rg_lo, rg_hi): a contiguous row-group range, or the whole file
+    when rg_lo is None."""
     import pyarrow.parquet as pq
 
-    from sketch_spark.sketches.base import make_sketch
-
-    sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
-    cols = sorted({c for _, _, c, _, _ in spec_list} | set(extra_columns))
-    any_unit = False
     for path, rg_lo, rg_hi in units:
-        any_unit = True
         if rg_lo is None:
-            table = pq.read_table(path, columns=cols, use_threads=False)
+            yield pq.read_table(path, columns=cols, use_threads=False)
         else:
             pf = pq.ParquetFile(path)
-            table = pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
-        if row_filter is not None:
-            table = row_filter(table)
-        for name, _, col, _, want_float in spec_list:
-            vals = _extract_from_array(table.column(col), want_float)
-            # bounded feed: a whole-file unit can be tens of millions of
-            # values; most kinds bound their own transients internally, and
-            # the batch-boundary-dependent kinds (pccm/cbf/pcbf/vac/hk) get
-            # a deterministic fixed-size sequence here — kill/resume and
-            # re-run stay byte-identical because the slicing is a pure
-            # function of the unit
-            for s in range(0, len(vals), _base.UPDATE_SUPER):
-                sketches[name].update(vals[s : s + _base.UPDATE_SUPER])
-    if any_unit:
-        yield {name: sk.to_bytes() for name, sk in sketches.items()}
+            yield pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
 
 
 def _plan_units(files: list[str], target: int) -> list[tuple]:
@@ -105,34 +90,6 @@ def _plan_units(files: list[str], target: int) -> list[tuple]:
         bounds = [round(i * n_rg / k) for i in range(k + 1)]
         units.extend((f, bounds[i], bounds[i + 1]) for i in range(k) if bounds[i] < bounds[i + 1])
     return units
-
-
-def _fold_states(dicts: Iterable[dict[str, bytes]]) -> Iterator[dict[str, bytes]]:
-    """Fold many serialized state-dicts into one: each input is deserialized
-    exactly once and the accumulator is re-serialized exactly once (a
-    pairwise reduce would pay compress+decompress per step)."""
-    acc: dict[str, Sketch] | None = None
-    for d in dicts:
-        if acc is None:
-            acc = {name: from_bytes(blob) for name, blob in d.items()}
-        else:
-            for name, blob in d.items():
-                acc[name].merge(from_bytes(blob))
-    if acc is not None:
-        yield {name: sk.to_bytes() for name, sk in acc.items()}
-
-
-def _fold_objects(dicts: Iterable[dict[str, bytes]]) -> dict[str, Sketch]:
-    acc: dict[str, Sketch] | None = None
-    for d in dicts:
-        if acc is None:
-            acc = {name: from_bytes(blob) for name, blob in d.items()}
-        else:
-            for name, blob in d.items():
-                acc[name].merge(from_bytes(blob))
-    if acc is None:
-        raise ValueError("no states to merge")
-    return acc
 
 
 # Spark SQL type → the Arrow type Spark's Python runner expects for that
@@ -249,7 +206,7 @@ def sketch_by_key_from_parquet(
                     b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
                 )
 
-        batches = _read_unit_batches(unit_stream(), cols)
+        batches = (b for t in _read_units(unit_stream(), cols) for b in t.to_batches())
         for out in _keyed_partial(
             batches, keys, spec_list, weight_col, flush_keys or FLUSH_KEYS
         ):
@@ -263,21 +220,7 @@ def sketch_by_key_from_parquet(
         [f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"]
     )
     partials = units_df.mapInArrow(task, schema)
-    return merge_keyed_states(partials, keys, key_types)
-
-
-def _read_unit_batches(units: Iterable[tuple], cols: list[str]) -> Iterator:
-    """Yield Arrow record batches for the work units (single-threaded
-    pyarrow — Spark owns core-level parallelism)."""
-    import pyarrow.parquet as pq
-
-    for path, rg_lo, rg_hi in units:
-        if rg_lo is None:
-            table = pq.read_table(path, columns=cols, use_threads=False)
-        else:
-            pf = pq.ParquetFile(path)
-            table = pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
-        yield from table.to_batches()
+    return merge_keyed_states(partials, keys)
 
 
 def build_sketches_from_parquet(
@@ -287,8 +230,8 @@ def build_sketches_from_parquet(
     row_filter=None,
     extra_columns: tuple[str, ...] = (),
 ) -> dict[str, Sketch]:
-    """Whole-table sketch build, parquet-direct: one Spark task per input
-    file → per-file sketch states → log-fanout coalesce-merge tree.
+    """Whole-table sketch build, parquet-direct: one Spark task per slice of
+    work units → per-task sketch states → :func:`~sketch_spark.spark.agg.tree_fold`.
 
     ``row_filter``: optional ``pa.Table -> pa.Table`` applied per file (the
     pushdown hook for simple predicates; must be deterministic).
@@ -304,27 +247,19 @@ def build_sketches_from_parquet(
     par = spark.sparkContext.defaultParallelism
     units = _plan_units(files, par)
     n_slices = min(len(units), max(par, len(units) // 8))
-    rdd = spark.sparkContext.parallelize(units, n_slices).mapPartitions(
-        lambda part: _build_states_for_units(part, spec_list, row_filter, extra_columns)
-    )
-    # log-fanout tree of partition-local folds (coalesce = no shuffle), then a
-    # driver-side object fold over the last ≤ fanout states. Each state is
-    # deserialized once per level — the correct version of the reference's
-    # disabled binomial tree (mpiParallelIO.cpp:301-345). Fanout 8 keeps the
-    # serial driver fold tiny (≤ 8 states) while the heavy fold levels run as
-    # parallel tasks.
-    # NOTE shuffle=True: a narrow coalesce would collapse the *map* stage to
-    # `nparts` tasks (losing scan parallelism); shuffling the kilobyte-scale
-    # states keeps the scan at full width and only the fold runs narrow
-    fanout = 8
-    nparts = n_slices
-    while nparts > fanout:
-        nparts = max(fanout, nparts // fanout)
-        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_states)
-    collected = rdd.collect()
-    if not collected:  # all files empty → identity sketches
-        return {s.name: s.new() for s in specs}
-    out = _fold_objects(collected)
-    for s in specs:
+    cols = sorted({s.col for s in specs} | set(extra_columns))
+
+    def task(part: Iterator[tuple]) -> Iterator[tuple[str, bytes]]:
+        sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
+        any_unit = False
+        for table in _read_units(part, cols):
+            any_unit = True
+            _absorb(sketches, table if row_filter is None else row_filter(table), spec_list)
+        if any_unit:
+            for name, sk in sketches.items():
+                yield name, sk.to_bytes()
+
+    out = tree_fold(spark.sparkContext.parallelize(units, n_slices).mapPartitions(task))
+    for s in specs:  # all files empty → identity sketches
         out.setdefault(s.name, s.new())
     return out

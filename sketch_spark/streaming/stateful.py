@@ -40,6 +40,18 @@ def _values_from_pdf(pdf: pd.DataFrame, col: str, want_float: bool) -> np.ndarra
     return v.astype(np.int64) if v.dtype.kind == "f" else v
 
 
+def _estimate(sk) -> float:
+    """The running scalar a streaming row carries: cardinality for the
+    distinct-count kinds, the median for quantile kinds, else NaN."""
+    if hasattr(sk, "estimate"):
+        return float(sk.estimate())
+    if hasattr(sk, "cardinality_estimate"):
+        return float(sk.cardinality_estimate())
+    if hasattr(sk, "quantile"):
+        return float(np.atleast_1d(sk.quantile(0.5))[0])
+    return float("nan")
+
+
 def _matrix_from_pdf(pdf: pd.DataFrame, col: str) -> np.ndarray:
     """(n, d) float matrix from a list column — for vector-consuming kinds
     (``Sketch.consumes_vectors``), which take one fixed-dimension vector
@@ -83,19 +95,11 @@ def stateful_sketch_by_key(
                 sk.update(vals)
         blob = sk.to_bytes()
         state.update((bytearray(blob), n_seen))
-        if hasattr(sk, "estimate"):
-            est = float(sk.estimate())
-        elif hasattr(sk, "cardinality_estimate"):
-            est = float(sk.cardinality_estimate())
-        elif hasattr(sk, "quantile"):
-            est = float(np.atleast_1d(sk.quantile(0.5))[0])
-        else:
-            est = float("nan")
         yield pd.DataFrame(
             {
                 "key": [str(key_tuple[0])],
                 "state": [blob],
-                "estimate": [est],
+                "estimate": [_estimate(sk)],
                 "n_rows": [n_seen],
             }
         )

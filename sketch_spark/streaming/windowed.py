@@ -19,7 +19,6 @@ passes.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
@@ -27,19 +26,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sketch_spark.sketches.base import from_bytes
 from sketch_spark.spark.agg import SketchSpec
-from sketch_spark.streaming.stateful import _values_from_pdf
+from sketch_spark.streaming.stateful import _estimate, _values_from_pdf
 
 OUTPUT_SCHEMA = "window_start string, status string, state binary, estimate double, n_rows long"
-
-
-def _estimate(sk) -> float:
-    if hasattr(sk, "estimate"):
-        return float(sk.estimate())
-    if hasattr(sk, "cardinality_estimate"):
-        return float(sk.cardinality_estimate())
-    if hasattr(sk, "quantile"):
-        return float(np.atleast_1d(sk.quantile(0.5))[0])
-    return float("nan")
 
 
 def windowed_sketch_stream(

@@ -68,3 +68,33 @@ def test_rerun_after_completion_is_stable(spark, fixtures, ckpt_dir):
     again = checkpointed_build(spark, input_path, SPECS, ckpt_dir)  # no new work
     for name in ("h", "c"):
         assert first[name].to_bytes() == again[name].to_bytes()
+
+
+def test_spec_with_no_values_in_any_file(spark, tmp_path):
+    """A spec whose column is empty in every file has no checkpoint row; the
+    build still returns its identity sketch, like the other build paths."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketch_spark.spark.agg import build_sketches
+    from sketch_spark.spark.files import build_sketches_from_parquet
+
+    input_path = tmp_path / "in"
+    input_path.mkdir()
+    for i in range(2):
+        pq.write_table(
+            pa.table({
+                "tokens": pa.array([[], []], pa.list_(pa.int32())),
+                "n_tok": pa.array([0, 0], pa.int32()),
+            }),
+            str(input_path / f"part-{i}.parquet"),
+        )
+    specs = [
+        SketchSpec("hll", "hll", "tokens", {"p": 12}),
+        SketchSpec("kll", "kll", "n_tok", {"k": 200}),
+    ]
+    got = checkpointed_build(spark, str(input_path), specs, str(tmp_path / "ckpt"))
+    assert sorted(got) == ["hll", "kll"]
+    assert got["hll"].to_bytes() == specs[0].new().to_bytes()
+    assert sorted(build_sketches(spark.read.parquet(str(input_path)), specs)) == sorted(got)
+    assert sorted(build_sketches_from_parquet(spark, str(input_path), specs)) == sorted(got)

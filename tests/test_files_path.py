@@ -28,6 +28,21 @@ def test_byte_parity_with_dataframe_path(spark, fixtures):
         assert via_files[name].to_bytes() == via_df[name].to_bytes()
 
 
+def test_fold_tree_levels_match_dataframe_path(spark, fixtures, monkeypatch):
+    """With the fold fan-out shrunk to 2, the parquet-direct build's states
+    pass through shuffled fold levels (8 tasks → 4 → 2 → collect at
+    local[8]) and still equal the DataFrame path byte for byte."""
+    from sketch_spark.spark import agg
+
+    monkeypatch.setattr(agg, "FOLD_FANOUT", 2)
+    d, _ = fixtures
+    path = os.path.join(d, "uniform")
+    via_files = build_sketches_from_parquet(spark, path, SPECS)
+    via_df = build_sketches(spark.read.parquet(path), SPECS)
+    for name in ("h", "c", "b", "m"):
+        assert via_files[name].to_bytes() == via_df[name].to_bytes()
+
+
 def test_quantile_sketch_estimate_parity(spark, fixtures):
     """KLL state is batch-boundary dependent (compaction points), so the two
     paths agree on estimates, not bytes."""

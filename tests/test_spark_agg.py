@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sketch_spark.sketches.base import from_bytes, make_sketch
+from sketch_spark.spark import agg
 from sketch_spark.spark.agg import (
     SketchSpec,
     build_sketches,
@@ -170,9 +171,10 @@ def test_partition_states_metrics(spark, uniform_df):
     assert pdf["n_values"].sum() == uniform_df.select(F.sum(F.size("tokens"))).first()[0]
 
 
-def test_tree_merge_matches_flat_merge(spark, uniform_df):
+def test_tree_merge_matches_flat_merge(spark, uniform_df, monkeypatch):
+    monkeypatch.setattr(agg, "FOLD_FANOUT", 2)
     states = partition_states(uniform_df, [SketchSpec("h", "hll", "tokens", {"p": 10})])
-    tree = tree_merge_states(states, fanout=2)["h"]
+    tree = tree_merge_states(states)["h"]
     blobs = [bytes(r["state"]) for r in states.collect()]
     flat = from_bytes(blobs[0])
     for b in blobs[1:]:

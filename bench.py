@@ -1,7 +1,8 @@
 """Headline benchmark — prints ONE JSON line for the driver.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Headline queries:
+local[N], N = --cores or get_spark's host default ($SPARK_GRAFT_CPUS, else
+the CPUs this process may use). Headline queries:
 
   token_hll_build   — flagship north-rule job: HLL+CMS+Bloom+MinHash+KLL in a
                       single scan over a synthesized token table
@@ -33,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import numpy as np
 from pyspark.sql import functions as F
 
+from sketch_spark import mem as _mem
 from sketch_spark.fixtures import ensure_token_table
 from sketch_spark.pipeline.dedup import (
     dedup_stats,
@@ -49,19 +51,22 @@ from sketch_spark.spark.session import get_spark
 # ~256 tokens/doc → 60k docs ≈ 15.4M tokens at sf0.1-equivalent effort
 TOKEN_DOCS = {"0.001": 600, "0.01": 6_000, "0.1": 60_000}
 
+# the flagship: HLL+CMS+Bloom+MinHash over the tokens, KLL over doc lengths
+FLAGSHIP_SPECS = [
+    SketchSpec("hll", "hll", "tokens", {"p": 14}),
+    SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
+    SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
+    SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
+    SketchSpec("kll", "kll", "n_tok", {"k": 200}),
+]
 
-from sketch_spark import mem as _mem
 
-
-def fault_canary_mb_s(mb: int = 64) -> float:
-    """First-touch page-fault throughput (MB/s) — see sketch_spark/mem.py
-    for the THP-direct-compaction regime this detects (NumPy faults at
-    ~45 MB/s instead of GB/s while steal%% and loadavg stay quiet). The
-    import of sketch_spark above already auto-tuned this process, so the
-    run-start reading here reflects the POST-tuning environment the
-    timings actually ran under; `hugepage_tuning` in the output records
-    the probe the tuner itself saw."""
-    return _mem.first_touch_mb_s(mb)
+def _cpu_stat():
+    try:
+        with open("/proc/stat") as f:
+            return [int(x) for x in f.readline().split()[1:]]
+    except OSError:
+        return None
 
 
 def main() -> None:
@@ -84,30 +89,15 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.xl:
-        cores = args.cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark = get_spark(cores=cores, app=f"sketch_bench_xl_c{cores}")
+        spark = get_spark(cores=args.cores, app="sketch_bench_xl")
+        cores = spark.sparkContext.defaultParallelism
         tok_dir = ensure_token_table(n_docs=2_000_000)
         tok = spark.read.parquet(tok_dir)
         n_tokens = int(tok.select(F.sum("n_tok")).first()[0])
-        specs = [
-            SketchSpec("hll", "hll", "tokens", {"p": 14}),
-            SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
-            SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
-            SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
-            SketchSpec("kll", "kll", "n_tok", {"k": 200}),
-        ]
-        def _cpu_stat():
-            try:
-                with open("/proc/stat") as f:
-                    return [int(x) for x in f.readline().split()[1:]]
-            except OSError:
-                return None
-
         la0 = round(os.getloadavg()[0], 2)
-        canary0 = fault_canary_mb_s()
         c0 = _cpu_stat()
         t0 = time.perf_counter()
-        sk = build_sketches_from_parquet(spark, tok_dir, specs)
+        sk = build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
         wall = time.perf_counter() - t0
         c1 = _cpu_stat()
         xl_steal = None
@@ -127,7 +117,6 @@ def main() -> None:
                     "n_tokens": n_tokens,
                     "loadavg": {"flagship_xl": [la0, round(os.getloadavg()[0], 2)]},
                     "steal_pct": {"flagship_xl": [xl_steal]},
-                    "fault_mb_s": [canary0, fault_canary_mb_s()],
                     "hugepage_tuning": _mem.last_tuning,
                     "affinity_cores": len(os.sched_getaffinity(0)),
                     "host_cores": os.cpu_count(),
@@ -139,8 +128,8 @@ def main() -> None:
 
     sf_dir = args.sf_dir
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    cores = args.cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(cores=cores, app=f"sketch_bench_c{cores}")
+    spark = get_spark(cores=args.cores, app="sketch_bench")
+    cores = spark.sparkContext.defaultParallelism
 
     # Interleaved min-of-N (default 3): each rep runs EVERY query once, the
     # reported number is the per-query minimum across reps. Co-tenant CPU
@@ -149,19 +138,11 @@ def main() -> None:
     # one rep of many queries instead of every rep of one query, and the
     # min is the code's quiet-window cost. all_reps + per-rep loadavg ride
     # along so the spread itself is recorded, not discarded.
-    canary0 = fault_canary_mb_s()
     timings: dict[str, float] = {}
     all_reps: dict[str, list[float]] = {}
     extra: dict[str, float] = {}
     loadavg: dict[str, list[float]] = {}
     steal_pct: dict[str, list[float]] = {}
-
-    def _cpu_stat():
-        try:
-            with open("/proc/stat") as f:
-                return [int(x) for x in f.readline().split()[1:]]
-        except OSError:
-            return None
 
     def timed(name):
         class _T:
@@ -196,13 +177,6 @@ def main() -> None:
     tok_dir = ensure_token_table(n_docs=n_docs)
     tok = spark.read.parquet(tok_dir)
     n_tokens = tok.select(F.sum("n_tok")).first()[0]
-    token_specs = [
-        SketchSpec("hll", "hll", "tokens", {"p": 14}),
-        SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
-        SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
-        SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
-        SketchSpec("kll", "kll", "n_tok", {"k": 200}),
-    ]
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -215,7 +189,7 @@ def main() -> None:
     # warm the Python-worker / AQE / codegen paths once: cold first use
     # measured 2-3× steady state (the round-1 "variance" and the round-2
     # cosine_topk "regression" were both session first-use, see BASELINE.md)
-    build_sketches_from_parquet(spark, tok_dir, token_specs)
+    build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
     minhash_lsh_neardups(docs.limit(200), threshold=0.7, num_hashes=64, bands=8).count()
     brute_force_topk(emb, qvecs, qids, k=10).collect()
 
@@ -228,7 +202,7 @@ def main() -> None:
     # methodology as BENCH_XL's min-of-3.
     for _rep in range(args.reps):
         with timed("token_hll_build"):
-            sk = build_sketches_from_parquet(spark, tok_dir, token_specs)
+            sk = build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
         assert sk["cms"].total() == n_tokens
 
     for _rep in range(args.reps):
@@ -311,9 +285,7 @@ def main() -> None:
         # hypervisor steal (% of ALL cpu cycles) during each rep — the
         # co-tenant noise loadavg can't see
         "steal_pct": steal_pct,
-        # first-touch fault throughput [run start, run end] plus the
-        # import-time tuner decision — see fault_canary_mb_s / mem.py
-        "fault_mb_s": [canary0, fault_canary_mb_s()],
+        # the SKETCH_SPARK_HUGEPAGE policy this process ran under (mem.py)
         "hugepage_tuning": _mem.last_tuning,
         "affinity_cores": len(os.sched_getaffinity(0)),
         "host_cores": os.cpu_count(),

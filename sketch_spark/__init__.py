@@ -16,13 +16,9 @@ Design contract (see SURVEY.md):
   * all per-row work happens in NumPy over Arrow batches — no per-row Python.
 """
 
-from sketch_spark import mem as _mem
-
-# Pick the huge-page policy for this process (driver or Spark worker) before
-# any kernel allocates: keeps NumPy's MADV_HUGEPAGE (~21% warm-kernel TLB
-# win) unless first-touch probes in the THP direct-compaction regime, where
-# it would tax every fresh buffer ~40x. See sketch_spark/mem.py.
-_mem.tune()
+# Applies SKETCH_SPARK_HUGEPAGE to this process (driver or Spark worker)
+# before any kernel allocates. See sketch_spark/mem.py.
+from sketch_spark import mem as _mem  # noqa: F401
 
 from sketch_spark.sketches import (  # noqa: F401
     BBitMinHash,

@@ -191,19 +191,6 @@ def ensure_token_table(n_docs: int, seed: int = 42, cache_dir: str | None = None
     return cache_dir
 
 
-def synth_token_table(spark, n_docs: int, seed: int = 42, cache_dir: str | None = None):
-    """Token DataFrame for bench: generate parquet to cache_dir (once), read
-    back — so Spark scans real files with real partition planning."""
-    return spark.read.parquet(ensure_token_table(n_docs, seed, cache_dir))
-
-
-if __name__ == "__main__":
-    import sys
-
-    out = sys.argv[1] if len(sys.argv) > 1 else ".fixtures_cache/tokens"
-    print(json.dumps(generate(out), indent=1)[:2000])
-
-
 def ensure_text_corpus(
     n_docs: int, seed: int = 42, dup_every: int = 10, cache_dir: str | None = None
 ) -> str:
@@ -220,9 +207,6 @@ def ensure_text_corpus(
     marker = os.path.join(cache_dir, "_done")
     if os.path.exists(marker):
         return cache_dir
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     rng = np.random.default_rng(seed)
     vocab = np.array([f"w{i:04d}" for i in range(5000)])
     lens = rng.integers(30, 200, n_docs)
@@ -247,3 +231,10 @@ def ensure_text_corpus(
     with open(marker, "w") as fh:
         fh.write("ok")
     return cache_dir
+
+
+if __name__ == "__main__":
+    import sys
+
+    out = sys.argv[1] if len(sys.argv) > 1 else ".fixtures_cache/tokens"
+    print(json.dumps(generate(out), indent=1)[:2000])

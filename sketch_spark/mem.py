@@ -1,63 +1,25 @@
-"""Adaptive huge-page policy for NumPy allocations.
+"""Process-wide switch for NumPy's huge-page advice.
 
 NumPy tags every large allocation with ``madvise(MADV_HUGEPAGE)`` (since
-1.18). Under THP ``defrag=madvise`` — the common production default, and
-this box's setting — that makes each first-touch page fault eligible for
-SYNCHRONOUS direct compaction: when host memory is fragmented, faulting
-fresh pages measured **~45 MB/s instead of ~1.8 GB/s** here (a 40× tax on
-every fresh Python worker's buffers; a single CMS update's ~120 MB of
-first-call temporaries took 7 s cold). Steady-state, huge pages are a real
-win for the scatter-heavy kernels: the same 4-sketch flagship measured
-~21% faster warm WITH madvise than without (TLB pressure).
+1.18). That is usually a win for the scatter-heavy kernels (fewer TLB
+misses), but on a host with THP ``defrag=madvise`` and fragmented memory
+each first-touch fault of such a buffer can stall in synchronous
+compaction. ``SKETCH_SPARK_HUGEPAGE=off`` turns the advice off for the
+process; any other value keeps NumPy's default.
 
-So neither always-on nor always-off is right; the regime is detectable in
-~10 ms. ``tune()`` probes first-touch throughput through the exact
-malloc+madvise path NumPy uses and disables NumPy's madvise for this
-process only when the probe lands in the pathological regime. It runs once
-per process at ``sketch_spark`` import — drivers and Spark Python workers
-both import the package before any kernel work, so every executor
-self-tunes on its own host.
-
-Override with SKETCH_SPARK_HUGEPAGE=on|off|auto (default auto).
+The switch is read once, at ``sketch_spark`` import. It must stay there:
+Spark Python workers import the package before any kernel runs, so the
+setting reaches every worker through the environment they inherit.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 
-# Probe size: large enough that NumPy madvises it (≥ 4 MB) and spans enough
-# huge-page units to average compaction stalls; small enough that even the
-# sick regime costs < 0.2 s once per process.
-_PROBE_MB = 8
-
-# Healthy hugepage-backed first-touch measures ~1-2 GB/s on this box (and
-# faster on real hardware); the compaction-storm regime measures ~45 MB/s.
-# 200 MB/s sits an order of magnitude from both.
-_THRESHOLD_MB_S = 200.0
-
-#: Filled by tune(): {"policy", "probe_mb_s", "toggled"}
+#: Filled at import: {"policy": <SKETCH_SPARK_HUGEPAGE or "default">, "toggled"}
 last_tuning: dict | None = None
-
-# maybe_retune() cadence. The compaction regime flips on minute timescales
-# (observed mid-bench: healthy at import, 20 MB/s by run end), so long-lived
-# executors re-probe while madvise is still ON. The retune probe must exceed
-# glibc's max dynamic mmap threshold (32 MB) so every call faults genuinely
-# fresh pages instead of reading a cached arena.
-#
-# GEOMETRIC BACKOFF: each healthy probe doubles the interval up to the cap —
-# a long-lived worker that keeps reading healthy converges to one 48 MB probe
-# per 8 minutes instead of one per 30 s (32 workers at the base cadence is
-# ~1.5 GB/interval of probe fault traffic on a DRAM-bound box). A storm that
-# appears late is still caught within one (longer) interval, and the ratchet
-# is one-way anyway — a single positive ends all probing.
-RETUNE_INTERVAL_S = 30.0
-RETUNE_INTERVAL_MAX_S = 480.0
-_RETUNE_PROBE_MB = 48
-_last_probe_t = 0.0
-_retune_interval_s = RETUNE_INTERVAL_S
 
 
 def _set_madvise(enabled: bool) -> bool:
@@ -71,74 +33,12 @@ def _set_madvise(enabled: bool) -> bool:
     return False
 
 
-def first_touch_mb_s(mb: int = _PROBE_MB) -> float:
-    """First-touch page-fault throughput (MB/s) through NumPy's allocation
-    path: allocate `mb` fresh MB, write one byte per 4 KiB page. This is
-    the number that collapses under THP direct compaction while steal% and
-    loadavg stay quiet. NOTE: a repeat call in the same process can read
-    allocator-arena reuse (GB/s) rather than true fresh-page cost — only
-    the first call per process, or one taken while prior probes are still
-    live, is a clean reading."""
-    a = np.empty(mb << 20, dtype=np.uint8)
-    t0 = time.perf_counter()
-    a[::4096] = 1
-    dt = time.perf_counter() - t0
-    del a
-    return round(mb / dt, 1)
-
-
-def tune(threshold_mb_s: float = _THRESHOLD_MB_S) -> dict:
-    """Probe once and pick the huge-page policy for this process.
-
-    auto (default): keep NumPy's madvise ON (the ~21% warm-kernel win)
-    unless first-touch lands in the compaction-storm regime, in which case
-    turn it OFF (dodging the ~40× fault tax that otherwise hits every
-    fresh buffer this worker allocates).
-    """
+def _apply() -> dict:
+    """Read SKETCH_SPARK_HUGEPAGE and apply it to this process."""
     global last_tuning
-    policy = os.environ.get("SKETCH_SPARK_HUGEPAGE", "auto").lower()
-    info: dict = {"policy": policy, "toggled": False}
-    if policy == "on":
-        last_tuning = info
-        return info
-    if policy == "off":
-        info["toggled"] = _set_madvise(False)
-        last_tuning = info
-        return info
-    speed = first_touch_mb_s()
-    info["probe_mb_s"] = speed
-    if speed < threshold_mb_s and _set_madvise(False):
-        info["toggled"] = True
-    global _last_probe_t
-    _last_probe_t = time.monotonic()
-    last_tuning = info
-    return info
+    policy = os.environ.get("SKETCH_SPARK_HUGEPAGE", "default").lower()
+    last_tuning = {"policy": policy, "toggled": policy == "off" and _set_madvise(False)}
+    return last_tuning
 
 
-def maybe_retune(threshold_mb_s: float = _THRESHOLD_MB_S) -> None:
-    """Periodic one-way ratchet for long-lived processes on the auto policy:
-    while madvise is still ON, re-probe at most every RETUNE_INTERVAL_S and
-    ratchet it OFF if the compaction regime has appeared since import.
-
-    One-way by design: with madvise OFF the probe faults plain 4 KiB pages,
-    which are fast even during a compaction storm, so the same probe cannot
-    detect recovery — and flapping back ON mid-storm is the costly error.
-    Called from make_sketch (every task body's first step), so each executor
-    worker self-checks on its own host; healthy cost is one ~30 ms probe per
-    interval, and a positive immediately stops the ~40× fault tax."""
-    global _last_probe_t, _retune_interval_s
-    if last_tuning is None or last_tuning.get("policy") != "auto" or last_tuning["toggled"]:
-        return
-    now = time.monotonic()
-    if now - _last_probe_t < _retune_interval_s:
-        return
-    _last_probe_t = now
-    speed = first_touch_mb_s(_RETUNE_PROBE_MB)
-    last_tuning["retune_probes"] = last_tuning.get("retune_probes", 0) + 1
-    if speed < threshold_mb_s and _set_madvise(False):
-        last_tuning["toggled"] = True
-        last_tuning["retuned_mb_s"] = speed
-    else:
-        # healthy reading: back off geometrically (see cadence note above)
-        _retune_interval_s = min(_retune_interval_s * 2.0, RETUNE_INTERVAL_MAX_S)
-        last_tuning["retune_interval_s"] = _retune_interval_s
+_apply()

@@ -219,12 +219,6 @@ def make_sketch(kind: str, **params: Any) -> Sketch:
     cls = _REGISTRY.get(kind)
     if cls is None:
         raise ValueError(f"unknown sketch kind {kind!r}; have {sorted(_REGISTRY)}")
-    # every task body starts here — the interval-limited huge-page re-probe
-    # lets long-lived executors catch a THP compaction regime that appears
-    # after import (see mem.maybe_retune; ~ns no-op within the interval)
-    from sketch_spark import mem
-
-    mem.maybe_retune()
     return cls(**params)
 
 

@@ -30,10 +30,6 @@ def _k1(q: np.ndarray, delta: float) -> np.ndarray:
     return (delta / (2.0 * math.pi)) * np.arcsin(2.0 * np.clip(q, 0.0, 1.0) - 1.0)
 
 
-def _k1_inv(k: np.ndarray, delta: float) -> np.ndarray:
-    return (np.sin(k * (2.0 * math.pi) / delta) + 1.0) / 2.0
-
-
 @register
 class TDigest(Sketch):
     kind = "tdigest"

@@ -7,6 +7,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver memory) for a local session on this host.
+
+    Cores default to the CPUs this process may run on and driver memory to
+    half of physical RAM, so a local-mode JVM cannot outgrow the machine.
+    SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM override either.
+    """
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{max(1, ram // 2 >> 20)}m"
+    return cores, mem
+
+
 def get_spark(
     cores: int | None = None,
     app: str = "sketch_spark",
@@ -21,7 +36,8 @@ def get_spark(
     (~256 tokens/row) stays in the tens-of-MB range per the SURVEY.md §7
     risk note.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cores, driver_mem = host_defaults()
+    cores = cores or default_cores
     # make the package importable in executor Python workers no matter where
     # the driver script lives (cluster deploys ship it via spark-submit
     # --py-files; local workers read PYTHONPATH at launch)
@@ -41,7 +57,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,9 +1,12 @@
-"""Huge-page policy tuner (sketch_spark/mem.py).
+"""Huge-page switch (sketch_spark/mem.py).
 
-The toggle is process-global NumPy state, so every test re-runs
-``mem.tune()`` with the default (auto) policy afterwards to restore the
-decision the package import made for this process.
+The toggle is process-global NumPy state, so every test restores the
+decision the package import made for this process afterwards.
 """
+
+import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
@@ -11,54 +14,48 @@ import pytest
 from sketch_spark import mem
 from sketch_spark.sketches.base import make_sketch
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture(autouse=True)
-def _restore_auto(monkeypatch):
+def _restore_import_decision():
+    decision = mem.last_tuning
     yield
-    monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    mem.tune()
-
-
-def test_probe_returns_positive_throughput():
-    speed = mem.first_touch_mb_s()
-    assert isinstance(speed, float)
-    assert speed > 0
+    mem._set_madvise(not decision["toggled"])
+    mem.last_tuning = decision
 
 
 def test_numpy_hook_exists_here():
     # the private hook has existed since numpy 1.18; if a future numpy drops
-    # it, tune() degrades to keeping the default ON policy (toggled=False)
+    # it, the switch degrades to keeping NumPy's default (toggled=False)
     assert mem._set_madvise(True)
 
 
 def test_policy_off_toggles(monkeypatch):
     monkeypatch.setenv("SKETCH_SPARK_HUGEPAGE", "off")
-    info = mem.tune()
-    assert info["policy"] == "off"
-    assert info["toggled"] is True
-    assert "probe_mb_s" not in info
+    assert mem._apply() == {"policy": "off", "toggled": True}
+    assert mem.last_tuning == {"policy": "off", "toggled": True}
 
 
 def test_policy_on_is_a_noop(monkeypatch):
     monkeypatch.setenv("SKETCH_SPARK_HUGEPAGE", "on")
-    info = mem.tune()
-    assert info == {"policy": "on", "toggled": False}
+    assert mem._apply() == {"policy": "on", "toggled": False}
 
 
-def test_auto_probes_and_records(monkeypatch):
+def test_default_is_a_noop(monkeypatch):
     monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    info = mem.tune()
-    assert info["policy"] == "auto"
-    assert info["probe_mb_s"] > 0
-    assert mem.last_tuning is info
+    assert mem._apply() == {"policy": "default", "toggled": False}
 
 
-def test_auto_toggles_below_threshold(monkeypatch):
-    monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1.0)
-    assert mem.tune()["toggled"] is True
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1e9)
-    assert mem.tune()["toggled"] is False
+def test_package_import_applies_the_switch():
+    """Spark workers get the policy only by importing the package, so the
+    switch must run on ``import sketch_spark`` with nothing else called."""
+    env = {**os.environ, "SKETCH_SPARK_HUGEPAGE": "off", "PYTHONPATH": REPO}
+    code = "import json, sketch_spark; print(json.dumps(sketch_spark.mem.last_tuning))"
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120, check=True
+    )
+    assert out.stdout.strip() == '{"policy": "off", "toggled": true}'
 
 
 def test_kernels_identical_under_either_policy():
@@ -72,67 +69,3 @@ def test_kernels_identical_under_either_policy():
         sk.update(vals)
         blobs.append(sk.to_bytes())
     assert blobs[0] == blobs[1]
-
-
-def test_maybe_retune_ratchets_off_when_regime_appears(monkeypatch):
-    monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1e9)
-    info = mem.tune()
-    assert info["toggled"] is False
-    # regime flips after import; interval elapsed
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1.0)
-    monkeypatch.setattr(mem, "_last_probe_t", 0.0)
-    mem.maybe_retune()
-    assert info["toggled"] is True
-    assert info["retuned_mb_s"] == 1.0
-
-
-def test_maybe_retune_respects_interval_and_is_one_way(monkeypatch):
-    monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    calls = []
-
-    def probe(mb=8):
-        calls.append(mb)
-        return 1e9
-
-    monkeypatch.setattr(mem, "first_touch_mb_s", probe)
-    mem.tune()
-    n0 = len(calls)
-    mem.maybe_retune()  # within interval: no probe
-    assert len(calls) == n0
-    # already-toggled state: never probes again even past the interval
-    mem.last_tuning["toggled"] = True
-    monkeypatch.setattr(mem, "_last_probe_t", 0.0)
-    mem.maybe_retune()
-    assert len(calls) == n0
-
-
-def test_maybe_retune_noop_on_manual_policy(monkeypatch):
-    monkeypatch.setenv("SKETCH_SPARK_HUGEPAGE", "on")
-    mem.tune()
-    monkeypatch.setattr(mem, "_last_probe_t", 0.0)
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1.0)
-    mem.maybe_retune()
-    assert mem.last_tuning["toggled"] is False
-
-
-def test_maybe_retune_backs_off_geometrically(monkeypatch):
-    monkeypatch.delenv("SKETCH_SPARK_HUGEPAGE", raising=False)
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1e9)
-    mem.tune()
-    monkeypatch.setattr(mem, "_retune_interval_s", mem.RETUNE_INTERVAL_S)
-    # three healthy probes double the interval each time, capped
-    expected = mem.RETUNE_INTERVAL_S
-    for _ in range(8):
-        monkeypatch.setattr(mem, "_last_probe_t", 0.0)
-        mem.maybe_retune()
-        expected = min(expected * 2.0, mem.RETUNE_INTERVAL_MAX_S)
-        assert mem._retune_interval_s == expected
-    assert mem._retune_interval_s == mem.RETUNE_INTERVAL_MAX_S
-    assert mem.last_tuning["retune_probes"] == 8
-    assert mem.last_tuning["retune_interval_s"] == mem.RETUNE_INTERVAL_MAX_S
-    # an unhealthy probe still ratchets off immediately at any interval
-    monkeypatch.setattr(mem, "first_touch_mb_s", lambda mb=8: 1.0)
-    monkeypatch.setattr(mem, "_last_probe_t", 0.0)
-    mem.maybe_retune()
-    assert mem.last_tuning["toggled"] is True

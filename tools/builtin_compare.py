@@ -7,7 +7,7 @@ mergeable state out, no cross-column single-pass, no checkpoint/resume).
 Our path: parquet-direct single pass building all sketches at once with
 exportable, mergeable, resumable states.
 
-Usage: python tools/builtin_compare.py [--docs 60000] [--cores 32]
+Usage: python tools/builtin_compare.py [--docs 60000] [--cores N]
 Prints a markdown table.
 """
 

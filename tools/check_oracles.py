@@ -44,7 +44,7 @@ def main():
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_spark()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []

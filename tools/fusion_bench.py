@@ -29,7 +29,7 @@ then hurts different strategies in different rounds instead of silently
 skewing one ratio. Every timed window records bracketing 1-min loadavg
 so the noise stays self-documenting. One JSON line.
 
-Usage: python tools/fusion_bench.py [--n-docs 2000000] [--cores 32] [--reps 3]
+Usage: python tools/fusion_bench.py [--n-docs 2000000] [--cores N] [--reps 3]
 """
 
 from __future__ import annotations
@@ -53,11 +53,12 @@ from sketch_spark.spark.session import get_spark
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-docs", type=int, default=2_000_000)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
-    spark = get_spark(cores=args.cores, app=f"fusion_bench_c{args.cores}")
+    spark = get_spark(cores=args.cores, app="fusion_bench")
+    cores = spark.sparkContext.defaultParallelism
     tok_dir = ensure_token_table(n_docs=args.n_docs)
     tok = spark.read.parquet(tok_dir)
     n_tokens = int(tok.select(F.sum("n_tok")).first()[0])
@@ -149,7 +150,7 @@ def main() -> None:
                 "loadavg": loadavg,
                 "n_docs": args.n_docs,
                 "n_tokens": n_tokens,
-                "cores": args.cores,
+                "cores": cores,
                 "hll_worst_rel_err_vs_exact": round(worst, 5),
                 "speedup_vs_builtin_approx": round(
                     timings["builtin_approx"] / timings["fused_sketch_by_key"], 2

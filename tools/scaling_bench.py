@@ -8,8 +8,11 @@ executor count (driver instruction). Fairness details that matter:
 
   * each level runs in its own subprocess **pinned with taskset to exactly
     that many CPUs**, so the small configuration cannot borrow idle cores
-    for JVM helper threads (unpinned local[2] on a 32-core box measures a
-    ~10-thread process, not a 2-core cluster);
+    for JVM helper threads (unpinned local[2] on a many-core box measures a
+    ~10-thread process, not a 2-core cluster). Both levels must fit in this
+    process's CPU affinity set: taskset silently clamps a CPU list to the
+    CPUs that exist, so a 4N leg wider than the set would run on fewer
+    cores than it reports. The script refuses such an N up front;
   * the input is large enough (default 480k docs ≈ 147M tokens) that the
     constant ~1s serial residue (final state collect + driver fold — the
     analog of the reference's rank-0 re-add, mpiParallelIO.cpp:283-296)
@@ -22,7 +25,8 @@ DRAM controller here, while a real 4N-executor cluster brings 4× the
 memory bandwidth — so these numbers are a *lower bound* on cluster
 scaling for the bandwidth-bound fraction of the job.
 
-Usage: python tools/scaling_bench.py [--n 2] [--docs 480000] [--repeat 2]
+Usage: python tools/scaling_bench.py [--n N] [--docs 480000] [--repeat 2]
+(N defaults to a quarter of the CPUs this process may use.)
 Prints one JSON line; BASELINE.md records the table.
 """
 
@@ -65,14 +69,9 @@ for _ in range({repeat}):
     loads.append([round(la0, 2), round(os.getloadavg()[0], 2)])
 assert sk["cms"].total() == n_tokens
 best = min(times)
-import numpy as np
-_c = np.empty(64 << 20, dtype=np.uint8)  # first-touch fault canary (see bench.py)
-_t0 = time.perf_counter()
-_c[::4096] = 1
-fault_mb_s = round(64 / (time.perf_counter() - _t0), 1)
 print("RESULT " + json.dumps({{"cores": cores, "sec": best, "n_tokens": int(n_tokens),
                                "tokens_per_sec": n_tokens / best, "times": times,
-                               "loadavg": loads, "fault_mb_s": fault_mb_s}}))
+                               "loadavg": loads}}))
 spark.stop()
 """
 
@@ -90,8 +89,9 @@ def run_level(cores: int, docs: int, repeat: int) -> dict:
 
 
 def main() -> None:
+    affinity = len(os.sched_getaffinity(0))
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=2, help="small level N (large = 4N)")
+    ap.add_argument("--n", type=int, default=max(1, affinity // 4), help="small level N (large = 4N)")
     ap.add_argument("--docs", type=int, default=480_000)
     ap.add_argument("--repeat", type=int, default=2)
     ap.add_argument(
@@ -103,6 +103,9 @@ def main() -> None:
         "each side reports its min across rounds",
     )
     args = ap.parse_args()
+    if not 1 <= 4 * args.n <= affinity:
+        # taskset would clamp a wider CPU list and time the 4N leg on fewer cores
+        ap.error(f"--n {args.n}: need N >= 1 and 4N <= {affinity}, the CPUs this process may use")
 
     if args.interleave:
         smalls, larges = [], []
